@@ -8,12 +8,20 @@ The manifest is a driver-side JSONL file, one record per completed
      "violation_count": M, "valid": bool, "stats_digest": "...",
      "spec_fingerprint": "..."}
 
+``valid`` and ``violation_count`` are the partition's row of the full
+verdict, global classes included. The records are lineage only: the
+runner reads just the set of done partitions from them, never a verdict.
+
 Restart flow: records whose (snapshot_id, spec_fingerprint) match the
-current run mark their partitions complete; the runner excludes them
-from the scan PREDICATE (so Iceberg/parquet partition pruning skips
-their files entirely — resume costs no I/O on done partitions), and
-the final verdict is (persisted violations of done parts) ∪ (fresh
-violations of remaining parts).
+current run mark their partitions complete; the runner filters them out
+of the partition-local classes' scan, reads their persisted violations
+back, and assembles the verdict over the full table (the row counts of
+the partition summary and the cross-partition classes still scan every
+partition).
+
+The directory carries a format stamp (``FORMAT_FILE``); a directory
+holding checkpoint state without it, or with another version, is
+rejected instead of being resumed with different semantics.
 
 Writes are atomic: temp file + ``os.replace`` of the whole manifest —
 a killed run can lose at most the in-flight batch, never corrupt the
@@ -30,16 +38,40 @@ from pathlib import Path
 from typing import Any, Optional
 
 
+#: version of the on-disk layout and of what a record means; bump it
+#: whenever either changes. 2: violations scoped per (snapshot, spec),
+#: ``valid`` covers the global classes too.
+FORMAT_VERSION = 2
+FORMAT_FILE = "format_version"
+
+
 class CheckpointManifest:
     def __init__(self, directory: str, snapshot_id: str, spec_fingerprint: str):
         self.dir = Path(directory)
         self.dir.mkdir(parents=True, exist_ok=True)
         self.path = self.dir / "manifest.jsonl"
+        self._check_format()
         self.snapshot_id = snapshot_id
         self.spec_fingerprint = spec_fingerprint
         self._records: dict[str, dict] = {}
         self._foreign: list[dict] = []
         self._load()
+
+    def _check_format(self) -> None:
+        stamp = self.dir / FORMAT_FILE
+        if stamp.is_file():
+            found = stamp.read_text().strip()
+        elif self.path.exists() or (self.dir / "violations").exists():
+            found = "none (written before format stamps)"
+        else:
+            stamp.write_text(f"{FORMAT_VERSION}\n")
+            return
+        if found != str(FORMAT_VERSION):
+            raise ValueError(
+                f"checkpoint dir {str(self.dir)!r} has format version "
+                f"{found}, this build reads version {FORMAT_VERSION}: "
+                "delete it or use a fresh checkpoint dir"
+            )
 
     def _load(self) -> None:
         if not self.path.is_file():
@@ -70,14 +102,7 @@ class CheckpointManifest:
         return self._records.get(part)
 
     def mark_done(self, part: str, metrics: dict[str, Any]) -> None:
-        rec = {
-            "snapshot_id": self.snapshot_id,
-            "spec_fingerprint": self.spec_fingerprint,
-            "part": str(part),
-            **metrics,
-        }
-        self._records[str(part)] = rec
-        self._flush()
+        self.mark_done_many({part: metrics})
 
     def mark_done_many(self, parts_metrics: dict[str, dict]) -> None:
         for part, metrics in parts_metrics.items():

@@ -201,7 +201,10 @@ def build_parser() -> argparse.ArgumentParser:
     v.add_argument("--baseline", default=None,
                    help="drift baseline snapshot parquet")
     v.add_argument("--check", dest="checks", default=None,
-                   help="comma list of constraint classes to run")
+                   help="comma list of constraint classes to run; "
+                        "they run in registry order (schema, rows, "
+                        "extraction, uniqueness, referential, "
+                        "cardinality, drift), whatever the list order")
     v.add_argument("--skip", default=None,
                    help="comma list of constraint classes to skip")
     v.add_argument("--fail-mode", dest="fail_mode_choice",

@@ -6,27 +6,39 @@ py_schemax/rulesets.py:17-49) and the fail-mode control flow
 Reference semantics → data-level semantics:
 
 - registry order + per-file short-circuit (rulesets.py:41-47):
-  constraint CLASSES run in registry order; ``fail_mode="fast"`` stops
-  after the first class that reports violations (remaining Spark jobs
-  are simply not submitted — the data-level analogue of stopping at
-  the first failing rule).
+  constraint CLASSES (the ``CHECKS`` table) run in registry order. The
+  schema class is the parse gate (rulesets.py:35-39): a spec that does
+  not structurally match the table stops the run. ``fail_mode="fast"``
+  stops after the first class that reports violations (remaining Spark
+  jobs are simply not submitted — the data-level analogue of stopping
+  at the first failing rule).
 - fail modes (config.py:137-150, output.py:55-65): ``after`` = run
   everything, exit 1 if any violation; ``fast`` = exit 1 at first
   failing class; ``never`` = always exit 0 (verdicts still produced).
 - rule selection (cli.py:241-250): ``checks`` whitelists classes,
   ``skip`` subtracts, mirroring --rule-apply / --rule-ignore.
 
-Checkpoint/resume: with a ``checkpoint_dir``, completed partitions are
-excluded from the scan predicate (partition pruning does the skipping)
-and their persisted violations are unioned back into the final verdict
-— resumed runs produce verdicts identical to single runs.
+Checkpoint/resume: with a ``checkpoint_dir`` the same registry loop runs
+the LOCAL classes only over partitions the manifest does not list as
+done, persists their violations per partition, and runs the GLOBAL
+classes over the full table. The verdict is then assembled as in a plain
+run — one partition summary over the full table, from the persisted
+local violations plus the global ones — so a resumed run gives the
+verdict of an uninterrupted one. Done partitions skip the local classes'
+work only: the summary's row counts and the global classes still scan
+the full table. A run the gate or ``fast`` stopped marks nothing done,
+so under ``fast`` done partitions are clean ones, unless an earlier
+attempt used another fail mode: a local class then short-circuits on
+the remaining partitions' violations only.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Optional
+from pathlib import Path
+from typing import Callable, Optional
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,11 +48,19 @@ from py_schemax_spark.checkpoint import (
     spec_fingerprint,
 )
 from py_schemax_spark.operators.drift import drift_verdicts, drift_violations
-from py_schemax_spark.operators.referential import referential_violations
+from py_schemax_spark.operators.extraction_check import extraction_violations
+from py_schemax_spark.operators.referential import (
+    cardinality_violations,
+    referential_violations,
+)
 from py_schemax_spark.operators.stats import column_stats
 from py_schemax_spark.operators.uniqueness import uniqueness_violations
 from py_schemax_spark.operators.violations import row_violations
-from py_schemax_spark.plans.compiler import schema_conformance
+from py_schemax_spark.plans.compiler import (
+    extraction_constraint,
+    referential_literal_constraints,
+    schema_conformance,
+)
 from py_schemax_spark.specs.model import TableSpec
 from py_schemax_spark.verdict import (
     RunSummary,
@@ -49,25 +69,133 @@ from py_schemax_spark.verdict import (
     summarize_partitions,
 )
 
-def _spec_has_cardinality(spec) -> bool:
-    """True when any column's ``references`` declares min/max_rows —
-    the cardinality class is a spec-opt-in no-op otherwise."""
-    return any(
-        cs.references is not None
-        and (cs.references.min_rows is not None
-             or cs.references.max_rows is not None)
-        for cs in spec.columns
+
+@dataclass(frozen=True)
+class Check:
+    """One constraint class of the registry.
+
+    - ``scope``: ``local`` classes are a pure function of one partition's
+      rows, so a checkpointed run skips them on done partitions;
+      ``global`` classes (a duplicate pair or a dim key's row count
+      spans partitions, drift is a whole-table distribution) run over
+      the full table on every attempt.
+    - ``plan(run, df, part, out)`` builds the class's violations lazily:
+      no job runs, and `explain_plans` prints it. None for classes
+      decided on the driver.
+    - ``settle(run, df, v, out)`` is the driver-side step a run adds
+      after the plan. It records schema errors, drift verdicts or a
+      table-level failure on ``out`` and returns the violations the
+      verdict uses.
+    - ``fuse(run, df)`` returns the constraints that fold the class into
+      the rows projection, or None when it cannot fuse.
+    - ``applies(run)`` is False when the class is a no-op for this spec
+      and run.
+    """
+
+    name: str
+    scope: str
+    plan: Optional[Callable] = None
+    settle: Optional[Callable] = None
+    fuse: Optional[Callable] = None
+    applies: Callable = lambda run: True
+
+
+@dataclass
+class _Pass:
+    """What one pass over the registry collects besides violations."""
+
+    fused: list = field(default_factory=list)  # constraints folded into rows
+    schema_errors: list = field(default_factory=list)
+    drift: list = field(default_factory=list)
+    persisted: list = field(default_factory=list)
+    # a class whose rows sit at the ``__table__`` pseudo-partition
+    # failed: partition_summary's per-partition join drops those rows,
+    # so the verdict tracks them here
+    table_failed: bool = False
+
+
+def _rows(run, df, part, out):
+    return row_violations(
+        df, run.spec, partition_expr=part, extra_constraints=out.fused
     )
 
 
+def _extraction(run, df, part, out):
+    return extraction_violations(df, run.spec, partition_expr=part)
+
+
+def _uniqueness(run, df, part, out):
+    return uniqueness_violations(
+        df, run.spec, order_col=run.config.order_col, partition_expr=part
+    )
+
+
+def _referential(run, df, part, out):
+    return referential_violations(
+        df, run.spec, run.dims, partition_expr=part,
+        max_broadcast_rows=run.config.dim_broadcast_limit,
+    )
+
+
+def _cardinality(run, df, part, out):
+    return cardinality_violations(df, run.spec, run.dims, partition_expr=part)
+
+
+def _fuse_referential(run, df):
+    # big dims (if any) still take the anti-join path, and the operator
+    # re-derives its own column list, so fused literal dims would
+    # double-report — fuse only when ALL referenced dims are literal-sized
+    lits, remaining = referential_literal_constraints(df, run.spec, run.dims)
+    return None if remaining else lits
+
+
+def _settle_schema(run, df, v, out):
+    out.schema_errors = schema_conformance(df, run.spec)
+
+
+def _settle_cardinality(run, df, v, out):
+    # persisted BEFORE the probe: count() (not isEmpty) materializes every
+    # partition into the cache in one pass, so the summary (and any later
+    # violations write) reads cached blocks instead of re-running the
+    # fact aggregation + dim join (ADVICE r04)
+    v = v.persist(StorageLevel.MEMORY_AND_DISK)
+    out.persisted.append(v)
+    out.table_failed |= v.count() > 0
+    return v
+
+
+def _settle_drift(run, df, v, out):
+    out.drift = drift_verdicts(df, run.spec, run.baseline)
+    out.table_failed |= any(d["drifted"] for d in out.drift)
+    return drift_violations(
+        run.spark, out.drift, key_name=run.spec.key_column
+    ).withColumn("part", F.lit("__table__"))
+
+
 #: registry order — the analogue of VALIDATORS_IN_ORDER
-#: (reference rulesets.py:17-21); DEFAULT_CHECKS mirrors the default
-#: rule set (rulesets.py:24) extended with the data-level classes.
-ALL_CHECKS = (
-    "schema", "rows", "extraction", "uniqueness", "referential",
-    "cardinality", "drift"
+#: (reference rulesets.py:17-21), extended with the data-level classes
+CHECKS = (
+    Check("schema", "local", settle=_settle_schema),
+    Check("rows", "local", plan=_rows),
+    Check("extraction", "local", plan=_extraction,
+          fuse=lambda run, df: [extraction_constraint(run.spec)],
+          applies=lambda run: run.spec.extraction is not None),
+    Check("uniqueness", "global", plan=_uniqueness),
+    Check("referential", "local", plan=_referential, fuse=_fuse_referential,
+          applies=lambda run: any(
+              cs.references is not None for cs in run.spec.columns)),
+    Check("cardinality", "global", plan=_cardinality,
+          settle=_settle_cardinality,
+          applies=lambda run: any(
+              cs.references is not None
+              and (cs.references.min_rows is not None
+                   or cs.references.max_rows is not None)
+              for cs in run.spec.columns)),
+    Check("drift", "global", settle=_settle_drift,
+          applies=lambda run: run.baseline is not None),
 )
-DEFAULT_CHECKS = ALL_CHECKS
+#: DEFAULT_CHECKS mirrors the default rule set (rulesets.py:24)
+ALL_CHECKS = DEFAULT_CHECKS = tuple(c.name for c in CHECKS)
 
 EXIT_OK = 0
 EXIT_INVALID = 1
@@ -84,12 +212,6 @@ class RunConfig:
     # referential dims above this many rows take the distinct-keys
     # strategy instead of broadcast (None = always broadcast)
     dim_broadcast_limit: Optional[int] = None
-    drift_compression: float = 200.0
-    drift_fan: int = 32
-    # fuse extraction + tiny-dim referential into the rows projection
-    # (one scan instead of three); disabled under fail_mode="fast",
-    # which needs per-class short-circuit order
-    fuse_row_checks: bool = True
     # per-partition summary rows materialized on the driver are capped
     # at this many (worst partitions first); run totals stay exact via
     # a single-row aggregate (verdict.summarize_partitions)
@@ -178,378 +300,154 @@ class ValidationRun:
             )
         )
 
+    def _checks(self) -> list[Check]:
+        enabled = self.config.enabled
+        return [c for c in CHECKS if c.name in enabled and c.applies(self)]
+
+    def _fuse(self, df: DataFrame, checks: list[Check], out: _Pass) -> set:
+        """Fold the fusable classes into the rows projection (one scan
+        instead of three) and return their names. fail_mode="fast"
+        needs per-class short-circuit order, so nothing fuses there."""
+        fused: set[str] = set()
+        if self.config.fail_mode == "fast" or not any(
+            c.plan is _rows for c in checks
+        ):
+            return fused
+        for c in checks:
+            constraints = c.fuse(self, df) if c.fuse else None
+            if constraints is not None:
+                out.fused += constraints
+                fused.add(c.name)
+        return fused
+
     # -- main entry ----------------------------------------------------------
 
     def run(self, df: DataFrame, source: str = "<dataframe>") -> RunResult:
         cfg = self.config
-        if cfg.checkpoint_dir:
-            return self._run_with_checkpoint(df, source)
-        return self._run_plain(df)
-
-    def _class_violations(self, name: str, df: DataFrame, part) -> DataFrame:
-        key = self.spec.key_column
-        if name == "rows":
-            return row_violations(df, self.spec, partition_expr=part)
-        if name == "extraction":
-            from py_schemax_spark.operators.extraction_check import (
-                extraction_violations,
-            )
-
-            return extraction_violations(df, self.spec, partition_expr=part)
-        if name == "uniqueness":
-            return uniqueness_violations(
-                df, self.spec, order_col=self.config.order_col,
-                partition_expr=part,
-            )
-        if name == "referential":
-            return referential_violations(
-                df, self.spec, self.dims, partition_expr=part,
-                max_broadcast_rows=self.config.dim_broadcast_limit,
-            )
-        raise ValueError(name)
-
-    def _run_plain(self, df: DataFrame) -> RunResult:
-        cfg = self.config
-        key = self.spec.key_column
         part = self._partition_expr(df)
-        enabled = cfg.enabled
-
-        schema_errors: list[dict] = []
-        drift_list: list[dict] = []
-        parts: list[DataFrame] = []
-        persisted_dfs: list[DataFrame] = []
-        checks_run: list[str] = []
-        failed_early = False
-        cardinality_failed = False
-
-        # fused single-scan path: extraction + literal-dim referential
-        # checks compile into the SAME projection as the row constraints
-        # (one scan instead of three). fail_fast keeps per-class order,
-        # so fusion is disabled there.
-        fused: set[str] = set()
-        extra_constraints: list = []
-        if (
-            cfg.fuse_row_checks
-            and cfg.fail_mode != "fast"
-            and "rows" in enabled
-        ):
-            from py_schemax_spark.plans.compiler import (
-                extraction_constraint,
-                referential_literal_constraints,
+        manifest, done, local_df = None, set(), df
+        if cfg.checkpoint_dir:
+            manifest = CheckpointManifest(
+                cfg.checkpoint_dir,
+                snapshot_id=snapshot_id_for(source),
+                spec_fingerprint=spec_fingerprint(self.spec),
             )
+            done = manifest.completed_parts
+            if done:
+                local_df = df.filter(~part.isin(sorted(done)))
 
-            if "extraction" in enabled and self.spec.extraction is not None:
-                ec = extraction_constraint(self.spec)
-                if ec is not None:
-                    extra_constraints.append(ec)
-                    fused.add("extraction")
-            if "referential" in enabled:
-                lits, remaining = referential_literal_constraints(
-                    df, self.spec, self.dims
-                )
-                extra_constraints.extend(lits)
-                if not remaining:
-                    fused.add("referential")
-                # big dims (if any) still run the anti-join path; the
-                # operator re-derives its own column list, so fused
-                # literal dims would double-report — only fuse when ALL
-                # referenced dims are literal-sized
-                if remaining and lits:
-                    extra_constraints = [
-                        c for c in extra_constraints
-                        if not c.constraint_id.endswith(".references")
-                    ]
-
-        for name in enabled:
-            if failed_early:
+        out = _Pass()
+        checks = self._checks()
+        fused = self._fuse(df, checks, out)
+        parts: list[tuple[str, DataFrame]] = []
+        checks_run: list[str] = []
+        stopped = False
+        for c in checks:
+            checks_run.append(c.name)
+            if c.name in fused:
+                continue  # ran inside the rows projection
+            cdf = local_df if c.scope == "local" else df
+            v = c.plan(self, cdf, part, out) if c.plan else None
+            if c.settle:
+                v = c.settle(self, cdf, v, out)
+            if v is not None:
+                parts.append((c.scope, v))
+            # the schema gate stops every mode; "fast" stops at the first
+            # failing class (reference rulesets.py:41-47)
+            if out.schema_errors or (
+                cfg.fail_mode == "fast"
+                and (out.table_failed if c.settle else not v.isEmpty())
+            ):
+                stopped = True
                 break
-            if name == "schema":
-                checks_run.append(name)
-                schema_errors = schema_conformance(df, self.spec)
-                # parse-gate semantics (rulesets.py:35-39): a spec that
-                # doesn't structurally match the table stops everything.
-                if schema_errors:
-                    break
-            elif name == "extraction" and self.spec.extraction is None:
-                continue
-            elif name in fused:
-                checks_run.append(name)  # ran inside the rows projection
-                continue
-            elif name == "rows":
-                checks_run.append(name)
-                v = row_violations(
-                    df, self.spec, partition_expr=part,
-                    extra_constraints=extra_constraints,
-                )
-                parts.append(v)
-                if cfg.fail_mode == "fast" and not v.isEmpty():
-                    failed_early = True
-            elif name in ("extraction", "uniqueness", "referential"):
-                checks_run.append(name)
-                v = self._class_violations(name, df, part)
-                parts.append(v)
-                if cfg.fail_mode == "fast":
-                    # short-circuit: first failing class stops the run
-                    # (reference rulesets.py:41-47)
-                    if not v.isEmpty():
-                        failed_early = True
-            elif name == "cardinality":
-                if not _spec_has_cardinality(self.spec):
-                    continue  # no bounds declared: a no-op class
-                checks_run.append(name)
-                from py_schemax_spark.operators.referential import (
-                    cardinality_violations,
-                )
 
-                from pyspark import StorageLevel
-
-                # persisted BEFORE the verdict probe: the probe's
-                # materialization fills the cache, so the summary path
-                # (and any later violations write) reuses it instead
-                # of re-running the fact aggregation + dim join
-                # (ADVICE r04: the class executed twice per run)
-                cv = cardinality_violations(
-                    df, self.spec, self.dims, partition_expr=part
-                ).persist(StorageLevel.MEMORY_AND_DISK)
-                persisted_dfs.append(cv)
-                parts.append(cv)
-                # __table__-attributed rows drop out of the
-                # per-partition summary join — track the verdict
-                # explicitly like drift does. count() (not isEmpty)
-                # materializes EVERY partition into the cache in this
-                # one pass — the summary job then reads cached blocks
-                cardinality_failed = cv.count() > 0
-                if cfg.fail_mode == "fast" and cardinality_failed:
-                    failed_early = True
-            elif name == "drift":
-                if self.baseline is None:
-                    continue
-                checks_run.append(name)
-                drift_list = drift_verdicts(
-                    df, self.spec, self.baseline,
-                    compression=cfg.drift_compression, fan=cfg.drift_fan,
+        if manifest:
+            fresh = [v for scope, v in parts if scope == "local"]
+            if fresh:
+                # dynamic partition OVERWRITE, not append: a run that
+                # crashed after writing a partition but before mark_done
+                # re-runs that partition on resume — append would then
+                # duplicate its rows, dynamic overwrite replaces exactly
+                # the re-run partitions and leaves completed ones untouched
+                merge_violations(*fresh).write.mode("overwrite").option(
+                    "partitionOverwriteMode", "dynamic"
+                ).partitionBy("part").parquet(manifest.violations_dir)
+            parts = [p for p in parts if p[0] != "local"]
+            if any(Path(manifest.violations_dir).glob("part=*")):
+                # the partition column reads back with an inferred type
+                persisted = self.spark.read.option(
+                    "basePath", manifest.violations_dir
+                ).parquet(manifest.violations_dir).withColumn(
+                    "part", F.col("part").cast("string")
                 )
-                dv = drift_violations(self.spark, drift_list, key_name=key)
-                parts.append(dv.withColumn("part", F.lit("__table__")))
-                if cfg.fail_mode == "fast" and any(
-                    d["drifted"] for d in drift_list
-                ):
-                    failed_early = True
+                parts.insert(0, ("local", persisted))
 
         violations = (
-            merge_violations(*parts) if parts else self._empty_violations(df, key)
+            merge_violations(*(v for _, v in parts))
+            if parts
+            else self._empty_violations(df, self.spec.key_column)
         )
-        # bounded collect: totals are exact for ALL partitions; at most
-        # max_summary_partitions per-partition rows reach the driver
-        # (worst first), so a 10^6-partition table cannot flood it
+        psum = partition_summary(df, violations, part)
         summary, run_summary = summarize_partitions(
-            partition_summary(df, violations, part),
-            max_rows=cfg.max_summary_partitions,
+            psum, max_rows=cfg.max_summary_partitions
         )
+        if manifest and not stopped:
+            # per-partition lineage of the full verdict, at most
+            # max_summary_partitions new records per attempt; the rest
+            # re-run (and overwrite their violations) next attempt
+            lineage = summary
+            if done and run_summary.suppressed_parts:
+                # the capped worst-first rows repeat on every attempt
+                # and may all be done: progress on not-yet-done ones
+                lineage = (
+                    psum.filter(~F.col("part").isin(sorted(done)))
+                    .limit(cfg.max_summary_partitions)
+                    .collect()
+                )
+            manifest.mark_done_many({
+                str(r["part"]): {
+                    "row_count": r["row_count"],
+                    "violation_count": r["violation_count"],
+                    "valid": bool(r["valid"]),
+                }
+                for r in lineage
+                if str(r["part"]) not in done
+            })
         invalid = (
-            (not run_summary.valid) or bool(schema_errors)
-            or cardinality_failed
-            or any(d["drifted"] for d in drift_list)
-        )
-        exit_code = (
-            EXIT_OK
-            if cfg.fail_mode == "never" or not invalid
-            else EXIT_INVALID
+            not run_summary.valid or bool(out.schema_errors)
+            or out.table_failed
         )
         return RunResult(
             violations=violations,
             summary_rows=summary,
             run_summary=run_summary,
-            exit_code=exit_code,
-            drift=drift_list,
-            schema_errors=schema_errors,
+            exit_code=(
+                EXIT_OK
+                if cfg.fail_mode == "never" or not invalid
+                else EXIT_INVALID
+            ),
+            drift=out.drift,
+            schema_errors=out.schema_errors,
+            skipped_parts=sorted(done),
             checks_run=tuple(checks_run),
-            persisted=tuple(persisted_dfs),
+            persisted=tuple(out.persisted),
         )
 
     def explain_plans(self, df: DataFrame) -> dict[str, str]:
         """Physical plan per enabled constraint class, WITHOUT running
         any jobs — the plan-first workflow (`validate --explain`):
         inspect where the exchanges, broadcasts, and pushed filters
-        land before paying for a 100-TB pass. Classes that are
-        no-ops for this spec (no extraction template, no cardinality
-        bounds, no baseline) are omitted."""
+        land before paying for a 100-TB pass. Classes decided on the
+        driver (schema, drift) and classes that are no-ops for this
+        spec (no extraction template, no references, no cardinality
+        bounds) are omitted."""
         part = self._partition_expr(df)
-        out: dict[str, str] = {}
-        for name in self.config.enabled:
-            v = None
-            if name == "rows":
-                v = row_violations(df, self.spec, partition_expr=part)
-            elif name == "extraction" and self.spec.extraction is not None:
-                v = self._class_violations(name, df, part)
-            elif name == "uniqueness":
-                v = self._class_violations(name, df, part)
-            elif name == "referential" and any(
-                cs.references is not None for cs in self.spec.columns
-            ):
-                v = self._class_violations(name, df, part)
-            elif name == "cardinality" and _spec_has_cardinality(
-                self.spec
-            ):
-                from py_schemax_spark.operators.referential import (
-                    cardinality_violations,
-                )
-
-                v = cardinality_violations(
-                    df, self.spec, self.dims, partition_expr=part
-                )
-            if v is not None:
-                out[name] = (
-                    v._jdf.queryExecution().executedPlan().toString()
-                )
-        return out
-
-    # -- checkpointed run -----------------------------------------------------
-
-    #: checks whose verdicts are a pure function of one partition's rows
-    #: — these are resumable (skipped when the manifest says done).
-    #: uniqueness and drift are GLOBAL (cross-partition) semantics: a
-    #: duplicate pair may span partitions, and drift is a whole-table
-    #: distribution — they re-run over the full (column-pruned) table on
-    #: every attempt, which keeps resumed verdicts identical to a single
-    #: uninterrupted run (SURVEY.md §7 hard-point (e)). The re-run is
-    #: cheap relative to the local pass: uniqueness scans only
-    #: (key, order) columns; drift scans one numeric expression.
-    LOCAL_CHECKS = ("schema", "rows", "extraction", "referential")
-    GLOBAL_CHECKS = ("uniqueness", "cardinality", "drift")
-
-    def _run_with_checkpoint(self, df: DataFrame, source: str) -> RunResult:
-        cfg = self.config
-        key = self.spec.key_column
-        part = self._partition_expr(df)
-        manifest = CheckpointManifest(
-            cfg.checkpoint_dir,
-            snapshot_id=snapshot_id_for(source),
-            spec_fingerprint=spec_fingerprint(self.spec),
-        )
-        done = manifest.completed_parts
-        remaining_df = df.withColumn("_part", part).filter(
-            ~F.col("_part").isin(list(done)) if done else F.lit(True)
-        ).drop("_part")
-
-        # resumable (partition-local) pipeline on remaining partitions
-        # only — the isin predicate prunes completed partitions at scan
-        enabled = cfg.enabled
-        local = tuple(c for c in enabled if c in self.LOCAL_CHECKS)
-        global_ = tuple(c for c in enabled if c in self.GLOBAL_CHECKS)
-        sub = ValidationRun(
-            self.spark, self.spec, self.dims, self.baseline,
-            RunConfig(**{**cfg.__dict__, "checkpoint_dir": None,
-                         "checks": local, "skip": ()}),
-        )
-        res = sub._run_plain(remaining_df)
-
-        # persist fresh violations per partition, then mark done.
-        # Dynamic partition OVERWRITE, not append: a run that crashed
-        # after writing a partition but before mark_done re-runs that
-        # partition on resume — append would then duplicate its rows,
-        # dynamic overwrite replaces exactly the re-run partitions and
-        # leaves completed ones untouched.
-        fresh = res.violations
-        fresh.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("part").parquet(manifest.violations_dir)
-        parts_metrics = {
-            str(r["part"]): {
-                "row_count": r["row_count"],
-                "violation_count": r["violation_count"],
-                "valid": bool(r["valid"]),
-            }
-            for r in res.summary_rows
+        return {
+            c.name: c.plan(self, df, part, _Pass())
+            ._jdf.queryExecution().executedPlan().toString()
+            for c in self._checks()
+            if c.plan
         }
-        manifest.mark_done_many(parts_metrics)
-
-        # global checks re-run over the FULL table every attempt
-        global_parts: list[DataFrame] = []
-        drift_list: list[dict] = []
-        checks_run = list(res.checks_run)
-        if "uniqueness" in global_:
-            checks_run.append("uniqueness")
-            global_parts.append(
-                uniqueness_violations(
-                    df, self.spec, order_col=cfg.order_col, partition_expr=part
-                )
-            )
-        if "cardinality" in global_ and _spec_has_cardinality(self.spec):
-            checks_run.append("cardinality")
-            from py_schemax_spark.operators.referential import (
-                cardinality_violations,
-            )
-
-            global_parts.append(
-                cardinality_violations(
-                    df, self.spec, self.dims, partition_expr=part
-                )
-            )
-        if "drift" in global_ and self.baseline is not None:
-            checks_run.append("drift")
-            drift_list = drift_verdicts(
-                df, self.spec, self.baseline,
-                compression=cfg.drift_compression, fan=cfg.drift_fan,
-            )
-            global_parts.append(
-                drift_violations(self.spark, drift_list, key_name=key)
-                .withColumn("part", F.lit("__table__"))
-            )
-
-        # final verdict = persisted (done ∪ fresh) local violations ∪
-        # fresh global violations; partition column read back as string
-        try:
-            all_violations = self.spark.read.option(
-                "basePath", manifest.violations_dir
-            ).parquet(manifest.violations_dir).withColumn(
-                "part", F.col("part").cast("string")
-            )
-        except Exception:
-            # nothing persisted yet (fully clean table, zero violations)
-            all_violations = res.violations
-        if global_parts:
-            from py_schemax_spark.verdict import merge_violations as _mv
-
-            all_violations = _mv(all_violations, *global_parts)
-        # summary across ALL partitions (manifest metrics for done ones)
-        all_summary = list(res.summary_rows)
-        run_summary = RunSummary()
-        for p in sorted(manifest.completed_parts):
-            rec = manifest.record(p)
-            run_summary.total_partitions += 1
-            run_summary.total_rows += rec.get("row_count", 0)
-            run_summary.total_violations += rec.get("violation_count", 0)
-            if rec.get("valid", True):
-                run_summary.valid_partitions += 1
-            else:
-                run_summary.invalid_partitions += 1
-                run_summary.failed_parts.append(p)
-        # fold in global-check violations (counted, not per-partition)
-        n_global = 0
-        for gp in global_parts:
-            n_global += gp.count()
-        run_summary.total_violations += n_global
-        invalid = (
-            (not run_summary.valid)
-            or bool(res.schema_errors)
-            or n_global > 0
-            or any(d["drifted"] for d in drift_list)
-        )
-        exit_code = (
-            EXIT_OK if cfg.fail_mode == "never" or not invalid else EXIT_INVALID
-        )
-        return RunResult(
-            violations=all_violations,
-            summary_rows=all_summary,
-            run_summary=run_summary,
-            exit_code=exit_code,
-            drift=drift_list,
-            schema_errors=res.schema_errors,
-            skipped_parts=sorted(done),
-            checks_run=tuple(checks_run),
-            persisted=res.persisted,
-        )
 
     def stats(self, df: DataFrame, exact_distinct: bool = False) -> DataFrame:
         return column_stats(

@@ -2,8 +2,14 @@
 reference's CLI fail-mode matrix (tests/test_cmd_validate.py:332-395)
 and the resume hard-point (SURVEY.md §7 (e))."""
 
+import pytest
 from pyspark.sql import functions as F
 
+from py_schemax_spark.checkpoint import (
+    CheckpointManifest,
+    snapshot_id_for,
+    spec_fingerprint,
+)
 from py_schemax_spark.operators.drift import build_baseline
 from py_schemax_spark.runner import RunConfig, ValidationRun
 from py_schemax_spark.sources.datagen import gen_lang_dim, gen_pages, write_pages
@@ -40,9 +46,19 @@ def test_fail_never_exits_zero(spark, pages, pages_spec, lang_dim):
     assert not res.run_summary.valid  # verdicts still produced
 
 
-def test_fail_fast_short_circuits_classes(spark, pages, pages_spec, lang_dim):
+#: a checkpointed run must give the verdict of a plain one
+CHECKPOINTED = pytest.mark.parametrize(
+    "checkpointed", [False, True], ids=["plain", "checkpointed"]
+)
+
+
+@CHECKPOINTED
+def test_fail_fast_short_circuits_classes(
+    spark, pages, pages_spec, lang_dim, tmp_path, checkpointed
+):
     res = _run(
-        spark, pages, pages_spec, {"lang_dim": lang_dim}, fail_mode="fast"
+        spark, pages, pages_spec, {"lang_dim": lang_dim}, fail_mode="fast",
+        checkpoint_dir=str(tmp_path) if checkpointed else None,
     )
     assert res.exit_code == 1
     # rows class already has violations → later classes never ran
@@ -65,15 +81,17 @@ def test_check_selection_and_skip(spark, pages, pages_spec, lang_dim):
     assert all(not i.endswith(".unique") for i in ids)
 
 
-def test_schema_gate_stops_everything(spark, pages_spec, lang_dim):
+@CHECKPOINTED
+def test_schema_gate_stops_everything(
+    spark, pages_spec, lang_dim, tmp_path, checkpointed
+):
     # table missing a required column → parse-gate semantics
     # (reference rulesets.py:35-39): no rule classes run
     bad = gen_pages(spark, 100).drop("text")
-    run = ValidationRun(
-        spark, pages_spec, {"lang_dim": lang_dim},
-        config=RunConfig(order_col="warc_ts"),
+    res = _run(
+        spark, bad, pages_spec, {"lang_dim": lang_dim},
+        checkpoint_dir=str(tmp_path) if checkpointed else None,
     )
-    res = run.run(bad)
     assert res.schema_errors
     assert res.exit_code == 1
     assert res.checks_run == ("schema",)
@@ -157,8 +175,92 @@ def test_checkpoint_resume_identical_verdicts(spark, pages_spec, lang_dim, tmp_p
     # the checkpointed runner re-runs it over the full table, so resumed
     # verdicts are identical to the uninterrupted run, including unique.
     assert resumed_rows == golden_rows
-    assert r2.run_summary.total_rows == golden.run_summary.total_rows
-    assert r2.run_summary.total_violations == golden.run_summary.total_violations
+    assert r2.run_summary.to_dict() == golden.run_summary.to_dict()
+    assert r2.exit_code == golden.exit_code
+    assert r2.checks_run == golden.checks_run
+
+
+def _url_table(spark, rows):
+    """A (url, warc_ts) table with ``url`` unique, one day partition
+    per distinct date."""
+    spec = validate_spec_dict({
+        "fqn": "t", "key": "url",
+        "columns": [
+            {"name": "url", "type": "string", "unique": True},
+            {"name": "warc_ts", "type": "datetime"},
+        ],
+    }).spec
+    df = spark.createDataFrame(rows, "url string, warc_ts string")
+    return spec, df.withColumn("warc_ts", F.to_timestamp("warc_ts"))
+
+
+def test_checkpoint_partition_validity_covers_global_classes(spark, tmp_path):
+    """A partition whose only violation is a cross-partition duplicate
+    (``url.unique``, a global class) is invalid in the checkpointed
+    verdict exactly as in a plain run."""
+    spec, df = _url_table(spark, [
+        ("a", "2024-01-01 10:00:00"), ("b", "2024-01-01 11:00:00"),
+        ("a", "2024-01-02 10:00:00"),
+    ])
+    plain = _run(spark, df, spec, {})
+    checkpointed = _run(spark, df, spec, {}, checkpoint_dir=str(tmp_path))
+    assert plain.run_summary.failed_parts == ["2024-01-02"]
+    assert checkpointed.run_summary.to_dict() == plain.run_summary.to_dict()
+    assert checkpointed.exit_code == plain.exit_code == 1
+    assert checkpointed.checks_run == plain.checks_run
+
+
+def test_checkpoint_resume_progresses_past_summary_cap(spark, tmp_path):
+    """With more partitions than ``max_summary_partitions``, every
+    attempt marks new partitions done (the capped worst-first rows are
+    the same on each attempt), so a resume finishes with the verdict of
+    a plain run."""
+    spec, df = _url_table(spark, [
+        ("a", "2024-01-01 10:00:00"), ("b", "2024-01-01 11:00:00"),
+        ("a", "2024-01-02 10:00:00"), ("c", "2024-01-03 10:00:00"),
+    ])
+    plain = _run(spark, df, spec, {}, max_summary_partitions=1)
+    for _ in range(3):
+        res = _run(spark, df, spec, {}, max_summary_partitions=1,
+                   checkpoint_dir=str(tmp_path))
+    manifest = CheckpointManifest(
+        str(tmp_path), snapshot_id_for("<dataframe>"), spec_fingerprint(spec)
+    )
+    assert manifest.completed_parts == {
+        "2024-01-01", "2024-01-02", "2024-01-03"
+    }
+    assert len(res.skipped_parts) == 2  # the last attempt resumed
+    assert res.run_summary.to_dict() == plain.run_summary.to_dict()
+    assert res.exit_code == plain.exit_code == 1
+    assert res.checks_run == plain.checks_run
+
+
+def test_registry_order_regardless_of_check_list_order(
+    spark, pages, pages_spec, lang_dim
+):
+    """Classes run in registry order whatever order ``checks`` lists
+    them in: under ``fast`` a dirty table stops at ``rows`` even when
+    ``uniqueness`` is listed first."""
+    res = _run(
+        spark, pages, pages_spec, {"lang_dim": lang_dim}, fail_mode="fast",
+        checks=("uniqueness", "rows"),
+    )
+    assert res.exit_code == 1
+    assert res.checks_run == ("rows",)
+
+
+def test_checkpoint_dir_without_format_stamp_is_rejected(tmp_path):
+    """A checkpoint dir from before format stamps (or with another
+    version) fails loudly instead of resuming under changed semantics."""
+    (tmp_path / "manifest.jsonl").write_text(
+        '{"snapshot_id": "s", "spec_fingerprint": "f", "part": "p", '
+        '"row_count": 1, "violation_count": 0, "valid": true}\n'
+    )
+    with pytest.raises(ValueError, match="format version"):
+        CheckpointManifest(str(tmp_path), "s", "f")
+    (tmp_path / "format_version").write_text("1\n")
+    with pytest.raises(ValueError, match="format version 1"):
+        CheckpointManifest(str(tmp_path), "s", "f")
 
 
 def test_summary_collect_bounded_at_high_partition_count(spark, pages_spec, lang_dim):
